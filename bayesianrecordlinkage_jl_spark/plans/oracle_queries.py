@@ -335,7 +335,6 @@ def _weighted_pairs_sql() -> str:
 # tests/test_determinism.py meaningful (its 7- vs 53-partition runs must
 # rebuild, not reuse a cached RDD). bench.py clears the memo before every
 # timed replicate so per-query bench numbers stay end-to-end rebuilds.
-# Set SPARK_GRAFT_MEMO_UPSTREAM=0 to disable entirely.
 #
 # The pure builders above (_vectors_spark/_scored_pairs_spark/_cc_spark)
 # stay untouched — tests/test_plans.py pins their optimized plans (single
@@ -345,36 +344,25 @@ def _weighted_pairs_sql() -> str:
 _UPSTREAM_MEMO: dict = {}
 
 
-def _memo_enabled() -> bool:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_MEMO_UPSTREAM", "1") != "0"
-
-
 def clear_upstream_memo() -> None:
     """Drop all memoized upstream DataFrames (benchmarks call this before
     each timed replicate; otherwise the memo lives for the session)."""
     _UPSTREAM_MEMO.clear()
 
 
-def _memo_key(spark: SparkSession, sf_dir: str, tag: str) -> tuple:
-    return (
-        tag,
-        id(spark),
-        sf_dir,
-        spark.conf.get("spark.sql.shuffle.partitions"),
-    )
+def _memoized(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFrame:
+    """build().localCheckpoint(), built once per (tag, session, sf_dir,
+    shuffle partitions)."""
+    key = (tag, id(spark), sf_dir, spark.conf.get("spark.sql.shuffle.partitions"))
+    if key not in _UPSTREAM_MEMO:
+        _UPSTREAM_MEMO[key] = build().localCheckpoint()
+    return _UPSTREAM_MEMO[key]
 
 
 def _vectors_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """localCheckpoint'ed comparison vectors, one comparator pass per
     (session, sf_dir): every downstream consumer sees only tinyint g-cols."""
-    if not _memo_enabled():
-        return _vectors_spark(spark, sf_dir)
-    key = _memo_key(spark, sf_dir, "vectors")
-    if key not in _UPSTREAM_MEMO:
-        _UPSTREAM_MEMO[key] = _vectors_spark(spark, sf_dir).localCheckpoint()
-    return _UPSTREAM_MEMO[key]
+    return _memoized(spark, sf_dir, "vectors", lambda: _vectors_spark(spark, sf_dir))
 
 
 def _scored_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,20 +380,13 @@ def _cc_pos_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     (edge-bearing nodes only, component = min node id)."""
     from ..operators.connected_components import connected_components
 
-    if not _memo_enabled():
-        wp = _scored_pairs_spark(spark, sf_dir).localCheckpoint()
-        return connected_components(
-            wp.where(F.col("w") > EDGE_THRESHOLD).select(
-                F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-            )
-        )
-    key = _memo_key(spark, sf_dir, "cc_pos")
-    if key not in _UPSTREAM_MEMO:
+    def _build():
         edges = _scored_pairs_cached(spark, sf_dir).where(
             F.col("w") > EDGE_THRESHOLD
         ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        _UPSTREAM_MEMO[key] = connected_components(edges).localCheckpoint()
-    return _UPSTREAM_MEMO[key]
+        return connected_components(edges)
+
+    return _memoized(spark, sf_dir, "cc_pos", _build)
 
 
 def _jp_exact_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -419,12 +400,7 @@ def _jp_exact_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["lang", "source"], JACCARD_MIN_PCT,
         )
 
-    if not _memo_enabled():
-        return _build()
-    key = _memo_key(spark, sf_dir, "jp_exact")
-    if key not in _UPSTREAM_MEMO:
-        _UPSTREAM_MEMO[key] = _build().localCheckpoint()
-    return _UPSTREAM_MEMO[key]
+    return _memoized(spark, sf_dir, "jp_exact", _build)
 
 
 def _jaccard_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,18 +410,13 @@ def _jaccard_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash band join + exact verify runs ONCE per (session, sf_dir)
     instead of once per catalog row — the VERDICT-r3 gate-budget fix
     applied to the second expensive upstream."""
-    if not _memo_enabled():
+    def _build():
         return dedup.ngram_jaccard_pairs_via_lsh(
             load(spark, sf_dir, "documents"), "doc_id", "text",
             JACCARD_MIN_PCT,
         )
-    key = _memo_key(spark, sf_dir, "jaccard_edges")
-    if key not in _UPSTREAM_MEMO:
-        _UPSTREAM_MEMO[key] = dedup.ngram_jaccard_pairs_via_lsh(
-            load(spark, sf_dir, "documents"), "doc_id", "text",
-            JACCARD_MIN_PCT,
-        ).localCheckpoint()
-    return _UPSTREAM_MEMO[key]
+
+    return _memoized(spark, sf_dir, "jaccard_edges", _build)
 
 
 def _jaccard_cc_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -463,12 +434,7 @@ def _jaccard_cc_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return components_with_isolated(edges, nodes)
 
-    if not _memo_enabled():
-        return _build()
-    key = _memo_key(spark, sf_dir, "jaccard_cc")
-    if key not in _UPSTREAM_MEMO:
-        _UPSTREAM_MEMO[key] = _build().localCheckpoint()
-    return _UPSTREAM_MEMO[key]
+    return _memoized(spark, sf_dir, "jaccard_cc", _build)
 
 
 def _embcos_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -486,12 +452,7 @@ def _embcos_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_planes=EMB_LSH_PLANES,
         )
 
-    if not _memo_enabled():
-        return _build()
-    key = _memo_key(spark, sf_dir, "embcos_pairs")
-    if key not in _UPSTREAM_MEMO:
-        _UPSTREAM_MEMO[key] = _build().localCheckpoint()
-    return _UPSTREAM_MEMO[key]
+    return _memoized(spark, sf_dir, "embcos_pairs", _build)
 
 
 def _cc_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1108,12 +1069,7 @@ def build_catalog() -> dict[str, dict]:
                 F.sum("_bit").cast("int").alias("rule_mask")
             )
 
-        if not _memo_enabled():
-            return _build()
-        key = _memo_key(s, d, "rule_masks")
-        if key not in _UPSTREAM_MEMO:
-            _UPSTREAM_MEMO[key] = _build().localCheckpoint()
-        return _UPSTREAM_MEMO[key]
+        return _memoized(s, d, "rule_masks", _build)
 
     def _rule_coverage_spark(s: SparkSession, d: str) -> DataFrame:
         return _rule_masks_spark(s, d).groupBy("rule_mask").agg(

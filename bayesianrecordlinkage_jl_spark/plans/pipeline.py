@@ -8,8 +8,12 @@ likelihood MAP path, post-hoc-block resolution), re-expressed Spark-first:
         --join fields--> pairs --comparators--> comparison vectors
         --groupBy dedup--> distinct vectors --driver EM--> (pM, pU)
         --broadcast weights join--> weighted pairs --filter w>penalty-->
-        edges --large-star/small-star CC--> block_id --applyInPandas
+        edges --size-capped CC--> block_id --applyInPandas
         Hungarian/greedy--> links --CC--> clusters
+
+Everything from the distinct vectors on is ONE resolution path (_resolve),
+shared by run_linkage (one dirty file of pages) and link_two_sources (two
+clean record files): the Fellegi-Sunter model is the same for both.
 
 Node ids are the portable 60-bit hash of url (deterministic, distributed id
 assignment with no global sort; collision probability ~n^2/2^60).
@@ -19,56 +23,45 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import comparators as C
+from ..functions import weights as W
 from ..functions.text import phash
 from ..operators import assignment, blocking, em
+from ..operators import connected_components as cc
 from ..operators.comparison_summary import ComparisonSummary
-from ..operators.connected_components import (
-    components_with_isolated,
-    connected_components,
-)
+# perfbench's records_bipartite trace hooks this name
+from ..operators.connected_components import connected_components  # noqa: F401
 from ..sources.checkpoint import StageStore
 from ..sources.pages import extract_text
 
+# -- linkage constants --------------------------------------------------------
+# No caller tunes these; the DuckDB oracles (plans/e2e_oracles.py) and
+# scripts/freeze_e2e_oracles.py import them. All of them (and FIELDS /
+# NLEVELS) enter the StageStore fingerprint (_fingerprint), so a resume
+# recomputes its stages when one changes.
+# MinHash-LSH blocking over page text
+N_BANDS = 6
+ROWS_PER_BAND = 1
+SHINGLE_K = 3
+LSH_MAX_BUCKET_ROWS = 1000
+# levenshtein comparator over the first LEV_PREFIX characters
+LEV_PREFIX = 80
+# salted composite-key blocking (lang / host): supplies the non-match
+# background EM needs for identifiability AND a recall backstop; salt caps
+# block size (skew control)
+KEY_BLOCK_MAX_ROWS = 64
+# method="exact_posterior": blocks above this many pairs fall back to
+# Hungarian MAP
+EXACT_MAX_BLOCK_PAIRS = 10
+# cap on pairs per resolution block; oversized components are re-clustered
+# at thresholds rising by BLOCK_SPLIT_INCR (iterative_bipartite_cluster2
+# analog) so no block can blow up the per-block solver at scale
+MAX_BLOCK_PAIRS = 10_000
+BLOCK_SPLIT_INCR = 0.5
 
-@dataclass
-class LinkageConfig:
-    # weight threshold; "bayes" = -logit(EM match prevalence), i.e. link
-    # iff posterior match probability > 1/2 (the reference's Bayes-estimate
-    # rule, README.md:148-151, in MAP form)
-    penalty: float | str = 2.0
-    n_bands: int = 6
-    rows_per_band: int = 1
-    shingle_k: int = 3
-    lev_prefix: int = 80
-    # salted composite-key blocking (lang / host): supplies the non-match
-    # background EM needs for identifiability AND a recall backstop; salt
-    # caps block size (skew control)
-    key_block_max_rows: int = 64
-    # per-block solver: hungarian / greedy / auction (MAP matching), or
-    # "exact_posterior" = the reference's Bayes estimate (link iff exact
-    # posterior marginal > 1/2, enumerated per block; blocks above
-    # exact_max_block_pairs fall back to Hungarian MAP)
-    method: str = "hungarian"
-    exact_max_block_pairs: int = 10
-    use_em: bool = True
-    em_max_iter: int = 200
-    # cap on pairs per resolution block; oversized components are re-clustered
-    # at rising thresholds (iterative_bipartite_cluster2 analog) so no block
-    # can blow up the per-block solver at scale. None disables.
-    max_block_pairs: int | None = 10_000
-    block_split_incr: float = 0.5
-    checkpoint_dir: str | None = None
-
-    def as_dict(self) -> dict:
-        return {k: getattr(self, k) for k in self.__dataclass_fields__}
-
-
-# comparison fields: (name, weight-kind) — must stay in lockstep with
-# _field_exprs below.
+# comparison fields of run_linkage: (name, weight-kind) and level counts
 FIELDS: list[tuple[str, str]] = [
     ("g_lev", "lev"),
     ("g_jac", "jac"),
@@ -77,29 +70,47 @@ FIELDS: list[tuple[str, str]] = [
 NLEVELS = {"g_lev": 4, "g_jac": 4, "g_lang": 2}
 
 
-def _field_exprs(cfg: LinkageConfig) -> dict:
-    return {
-        "g_lev": C.lev_ord(
-            F.substring("text_a", 1, cfg.lev_prefix),
-            F.substring("text_b", 1, cfg.lev_prefix),
-        ),
-        "g_jac": C.token_jaccard_ord(F.col("text_a"), F.col("text_b")),
-        "g_lang": C.bool_ord(F.col("lang_a"), F.col("lang_b")),
+@dataclass
+class LinkageConfig:
+    # weight threshold; "bayes" = -logit(EM match prevalence), i.e. link
+    # iff posterior match probability > 1/2 (the reference's Bayes-estimate
+    # rule, README.md:148-151, in MAP form)
+    penalty: float | str = 2.0
+    # per-block solver: hungarian / greedy / auction (MAP matching), or
+    # "exact_posterior" = the reference's Bayes estimate (link iff exact
+    # posterior marginal > 1/2, enumerated per block; blocks above
+    # EXACT_MAX_BLOCK_PAIRS fall back to Hungarian MAP)
+    method: str = "hungarian"
+    use_em: bool = True
+    checkpoint_dir: str | None = None
+
+    def as_dict(self) -> dict:
+        return {k: getattr(self, k) for k in self.__dataclass_fields__}
+
+
+def _fingerprint(cfg: LinkageConfig) -> dict:
+    """What a resumed stage must match: the config plus every module
+    constant."""
+    consts = {
+        k: v for k, v in globals().items()
+        if k.isupper() and isinstance(v, (int, float, list, dict))
     }
+    return {**cfg.as_dict(), **consts}
 
 
-def _score_vectors(spark: SparkSession, pairs: DataFrame, cfg: LinkageConfig) -> DataFrame:
+def _score_vectors(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     """Comparison vectors with each comparator kernel evaluated exactly
     once per pair: raw measures (banded levenshtein on per-doc prefixes,
     token-set intersect on per-doc distinct-token arrays) in one pre-shuffle
     projection, pair-key aggregate barrier, then integer bin CASEs. The
     result is localCheckpointed because both the distinct-vector dedup and
     the vec_id attach branch from it (without materialization each branch
-    would re-run the comparators). Value-identical to _field_exprs."""
+    would re-run the comparators). Value-identical to C.lev_ord on the
+    LEV_PREFIX prefixes, C.token_jaccard_ord and C.bool_ord."""
     raw = pairs.select(
         "id_a",
         "id_b",
-        F.levenshtein("t_pre_a", "t_pre_b", cfg.lev_prefix // 2).alias("_lev"),
+        F.levenshtein("t_pre_a", "t_pre_b", LEV_PREFIX // 2).alias("_lev"),
         F.greatest(F.length("t_pre_a"), F.length("t_pre_b")).alias("_mx"),
         F.size(F.array_intersect("toks_a", "toks_b")).alias("_i"),
         (F.size("toks_a") + F.size("toks_b")).alias("_nab"),
@@ -131,6 +142,99 @@ def _resolve_penalty(penalty: float | str, params: em.FSParams | None) -> float:
     return float(penalty)
 
 
+def _no_store(_name: str, fn):
+    return fn()
+
+
+def _resolve(
+    spark: SparkSession,
+    summary: ComparisonSummary,
+    field_kinds: list[tuple[str, str]],
+    penalty: float | str,
+    use_em: bool,
+    method: str,
+    stage=_no_store,
+) -> tuple[DataFrame, DataFrame, DataFrame, em.FSParams | None]:
+    """The Fellegi-Sunter resolution path both entry points share: distinct
+    vectors -> EM (the fixed level log-ratios of field_kinds when EM is off
+    or there are no vectors) -> broadcast weights join -> above-penalty
+    edges -> size-capped CC -> block join with shrink -> per-block
+    one-to-one. `stage(name, fn)` runs (or resumes) the "components" and
+    "links" stages. Returns (scored pairs, comps, links, params)."""
+    dvecs_pd = summary.dvecs_pd()
+    gcols = summary.gcols
+    if use_em and len(dvecs_pd) > 0:
+        params = em.estimate_em(dvecs_pd, gcols, summary.nlevels)
+        wpd = em.weights_vector(dvecs_pd, gcols, params)
+    else:
+        params = None
+        wpd = dvecs_pd[["vec_id"]].copy()
+        w = None
+        for g, kind in field_kinds:
+            lr = W.level_log_ratios(kind)
+            contrib = dvecs_pd[g].map(lambda lvl: lr.get(int(lvl), 0.0))
+            w = contrib if w is None else w + contrib
+        wpd["w"] = w
+
+    penalty = _resolve_penalty(penalty, params)
+    wdf = spark.createDataFrame(wpd, schema="vec_id long, w double")
+    scored = summary.pairs.join(F.broadcast(wdf), on="vec_id", how="left")
+    # above-penalty edges, shrunk by the penalty; materialised once because
+    # the capped CC and the block join both read them
+    edges = scored.where(F.col("w") > penalty).select(
+        "id_a", "id_b", (F.col("w") - F.lit(penalty)).alias("w")
+    ).localCheckpoint()
+
+    # -- above-penalty graph -> size-capped CC -> block ids -----------------
+    # hot components are split at rising thresholds (skew control for the
+    # per-block solver)
+    def _blocks() -> DataFrame:
+        return cc.size_capped_components(
+            edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "w"),
+            MAX_BLOCK_PAIRS, 0.0, BLOCK_SPLIT_INCR,
+        ).select("node", "component", "capped")
+
+    comps = stage("components", _blocks)
+    blocked = edges.join(
+        comps.select(F.col("node").alias("id_a"), F.col("component").alias("block_id")),
+        on="id_a",
+    ).select("id_a", "id_b", "w", "block_id")
+
+    # -- per-block one-to-one resolution ------------------------------------
+    def _links() -> DataFrame:
+        if method == "exact_posterior":
+            # Bayes estimate (reference README.md:148-151): link iff the
+            # EXACT posterior marginal over the block's matchings exceeds
+            # 1/2 — enumerated where the block is small enough, Hungarian
+            # MAP elsewhere. One-to-one by construction: two conflicting
+            # pairs are mutually exclusive events over matchings, so their
+            # marginals sum to <= 1 and cannot both exceed 1/2.
+            from ..operators.mcmc import exact_posterior_links
+
+            bp = blocked.select(
+                "id_a", "id_b", F.exp("w").alias("r"), "block_id"
+            ).localCheckpoint()
+            small_ids = (
+                bp.groupBy("block_id")
+                .agg(F.count(F.lit(1)).alias("_np"))
+                .where(F.col("_np") <= EXACT_MAX_BLOCK_PAIRS)
+                .select("block_id")
+            )
+            exact = exact_posterior_links(
+                bp, max_pairs_per_block=EXACT_MAX_BLOCK_PAIRS
+            ).select("id_a", "id_b", "block_id")
+            exact_w = exact.join(
+                blocked.select("id_a", "id_b", "w"), on=["id_a", "id_b"]
+            ).select("id_a", "id_b", "w", "block_id")
+            big = blocked.join(small_ids, on="block_id", how="left_anti")
+            solved = assignment.one_to_one(big, method="hungarian")
+            return solved.unionByName(exact_w.select(*solved.columns))
+        return assignment.one_to_one(blocked, method=method)
+
+    links = stage("links", _links)
+    return scored, comps, links, params
+
+
 @dataclass
 class LinkageResult:
     docs: DataFrame
@@ -157,7 +261,7 @@ def run_linkage(
 ) -> LinkageResult:
     cfg = cfg or LinkageConfig()
     store = StageStore(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
-    ccfg = cfg.as_dict()
+    ccfg = _fingerprint(cfg)
 
     def stage(name: str, fn):
         if store is None:
@@ -187,14 +291,15 @@ def run_linkage(
             docs,
             id_col="node",
             text_col="text",
-            n_bands=cfg.n_bands,
-            rows_per_band=cfg.rows_per_band,
-            shingle_k=cfg.shingle_k,
+            n_bands=N_BANDS,
+            rows_per_band=ROWS_PER_BAND,
+            shingle_k=SHINGLE_K,
+            max_bucket_rows=LSH_MAX_BUCKET_ROWS,
         ).select("id_a", "id_b")
         keyed = []
         for key in (["lang"], ["host"]):
             salted = blocking.salt_hot_keys(
-                docs, "node", key, max_block_rows=cfg.key_block_max_rows
+                docs, "node", key, max_block_rows=KEY_BLOCK_MAX_ROWS
             )
             keyed.append(
                 blocking.key_blocking(
@@ -215,7 +320,7 @@ def run_linkage(
         proj = docs.select(
             "node",
             "lang",
-            F.substring("text", 1, cfg.lev_prefix).alias("t_pre"),
+            F.substring("text", 1, LEV_PREFIX).alias("t_pre"),
             F.array_distinct(F.split("text", " ")).alias("toks"),
         )
         fa = proj.select(
@@ -240,101 +345,13 @@ def run_linkage(
             .join(fb, "id_b")
         )
 
-    vectors = _score_vectors(spark, _pairs(), cfg)
+    vectors = _score_vectors(spark, _pairs())
     summary = ComparisonSummary.build(
         vectors, {g: F.col(g) for g, _ in FIELDS}, NLEVELS
     )
-    gcols = summary.gcols
-    dvecs_pd = summary.dvecs_pd()
-
-    # -- parameter estimation on aggregated counts (driver numpy) ----------
-    if cfg.use_em and len(dvecs_pd) > 0:
-        params = em.estimate_em(dvecs_pd, gcols, NLEVELS, max_iter=cfg.em_max_iter)
-    else:
-        params = None
-
-    if params is not None:
-        wpd = em.weights_vector(dvecs_pd, gcols, params)
-    else:
-        from ..functions import weights as W
-
-        wpd = dvecs_pd[["vec_id"]].copy()
-        w = None
-        for g, kind in FIELDS:
-            lr = W.level_log_ratios(kind)
-            contrib = dvecs_pd[g].map(lambda lvl: lr.get(int(lvl), 0.0))
-            w = contrib if w is None else w + contrib
-        wpd["w"] = w
-
-    penalty = _resolve_penalty(cfg.penalty, params)
-    wdf = spark.createDataFrame(wpd, schema="vec_id long, w double")
-    scored = summary.pairs.join(F.broadcast(wdf), on="vec_id", how="left")
-
-    # -- positive-weight graph -> connected components -> block ids --------
-    # size-capped variant splits hot components at rising thresholds
-    # (skew control for the per-block solver)
-    def _blocks() -> DataFrame:
-        if cfg.max_block_pairs is not None:
-            from ..operators.connected_components import size_capped_components
-
-            wedges = scored.where(F.col("w") > penalty).select(
-                F.col("id_a").alias("src"),
-                F.col("id_b").alias("dst"),
-                (F.col("w") - F.lit(penalty)).alias("w"),
-            )
-            return size_capped_components(
-                wedges, cfg.max_block_pairs, 0.0, cfg.block_split_incr
-            ).select("node", "component", "capped")
-        edges = scored.where(F.col("w") > penalty).select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-        )
-        return connected_components(edges).withColumn("capped", F.lit(False))
-
-    comps = stage("components", _blocks)
-
-    blocked = (
-        scored.where(F.col("w") > penalty)
-        .join(comps.withColumnRenamed("node", "id_a"), on="id_a")
-        .withColumnRenamed("component", "block_id")
-        .withColumn("w", F.col("w") - F.lit(penalty))  # shrink_weights
+    scored, comps, links, params = _resolve(
+        spark, summary, FIELDS, cfg.penalty, cfg.use_em, cfg.method, stage
     )
-
-    # -- per-block one-to-one resolution ------------------------------------
-    def _links() -> DataFrame:
-        if cfg.method == "exact_posterior":
-            # Bayes estimate (reference README.md:148-151): link iff the
-            # EXACT posterior marginal over the block's matchings exceeds
-            # 1/2 — enumerated where the block is small enough, Hungarian
-            # MAP elsewhere. One-to-one by construction: two conflicting
-            # pairs are mutually exclusive events over matchings, so their
-            # marginals sum to <= 1 and cannot both exceed 1/2.
-            from ..operators.mcmc import exact_posterior_links
-
-            bp = blocked.select(
-                "id_a", "id_b", F.exp("w").alias("r"), "block_id"
-            ).localCheckpoint()
-            small_ids = (
-                bp.groupBy("block_id")
-                .agg(F.count(F.lit(1)).alias("_np"))
-                .where(F.col("_np") <= cfg.exact_max_block_pairs)
-                .select("block_id")
-            )
-            exact = exact_posterior_links(
-                bp, max_pairs_per_block=cfg.exact_max_block_pairs
-            ).select("id_a", "id_b", "block_id")
-            exact_w = exact.join(
-                blocked.select("id_a", "id_b", "w"), on=["id_a", "id_b"]
-            ).select("id_a", "id_b", "w", "block_id")
-            big = blocked.select("id_a", "id_b", "w", "block_id").join(
-                small_ids, on="block_id", how="left_anti"
-            )
-            solved = assignment.one_to_one(big, method="hungarian")
-            return solved.unionByName(exact_w.select(*solved.columns))
-        return assignment.one_to_one(
-            blocked.select("id_a", "id_b", "w", "block_id"), method=cfg.method
-        )
-
-    links = stage("links", _links)
 
     # -- transitive clustering: CC of the positive-weight graph -------------
     # (the links table is the one-to-one precision artifact; clusters are the
@@ -377,12 +394,15 @@ def link_two_sources(
 ) -> tuple[DataFrame, em.FSParams | None]:
     """Bipartite two-file linkage — the direct reference analog
     (vignette lifecycle, /root/reference/vignette/example.jl): candidate
-    pairs (optionally key-blocked), comparison-vector dedup, EM m/u, FS
-    weights, CC decomposition, per-block one-to-one. Here the matching IS
-    the entity-cluster output (each record appears in at most one link).
+    pairs (optionally key-blocked), comparison-vector dedup, then the
+    resolution path run_linkage uses (EM m/u, FS weights, size-capped CC
+    decomposition, per-block one-to-one). Here the matching IS the
+    entity-cluster output (each record appears in at most one link).
 
     df_a/df_b must expose id_col (string/long) plus the columns consumed by
-    field_exprs with _a/_b suffixes. Returns (links, params).
+    field_exprs with _a/_b suffixes. field_kinds names the fixed level
+    log-ratios used when EM is off. Returns (links, params); params is None
+    when EM is off or there are no candidate pairs.
 
     penalty="bayes" sets the threshold to -logit(p_hat) from the EM match
     prevalence — link iff posterior match probability > 1/2, the
@@ -405,35 +425,8 @@ def link_two_sources(
         pairs = a.crossJoin(b)  # only sane for vignette-scale fixtures
 
     summary = ComparisonSummary.build(pairs, field_exprs, nlevels)
-    dvecs_pd = summary.dvecs_pd()
-    params = (
-        em.estimate_em(dvecs_pd, summary.gcols, nlevels) if use_em else None
-    )
-    if params is not None:
-        wpd = em.weights_vector(dvecs_pd, summary.gcols, params)
-    else:
-        from ..functions import weights as W
-
-        w = None
-        for g, kind in field_kinds:
-            lr = W.level_log_ratios(kind)
-            contrib = dvecs_pd[g].map(lambda lvl: lr.get(int(lvl), 0.0))
-            w = contrib if w is None else w + contrib
-        wpd = pd.DataFrame({"vec_id": dvecs_pd["vec_id"], "w": w})
-    penalty = _resolve_penalty(penalty, params)
-    wdf = spark.createDataFrame(wpd, schema="vec_id long, w double")
-    scored = summary.pairs.join(F.broadcast(wdf), on="vec_id", how="left")
-    pos = scored.where(F.col("w") > penalty)
-    comps = connected_components(
-        pos.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    blocked = (
-        pos.join(comps.withColumnRenamed("node", "id_a"), on="id_a")
-        .withColumnRenamed("component", "block_id")
-        .withColumn("w", F.col("w") - F.lit(penalty))
-    )
-    links = assignment.one_to_one(
-        blocked.select("id_a", "id_b", "w", "block_id"), method=method
+    _scored, _comps, links, params = _resolve(
+        spark, summary, field_kinds, penalty, use_em, method
     )
     # map hashed node ids back to record ids
     links = (

@@ -13,8 +13,9 @@ Frozen per pipeline:
                          as literals) plus the EM weights.
 
 Also records fixture-size facts the oracles' simplifications rely on
-(max component pair count far under the size-cap, so capped-CC reduces to
-plain CC on this fixture) and ASSERTS them at freeze time.
+(on both fixtures the max component pair count is far under the size cap,
+so the pipeline's capped CC reduces to plain CC) and ASSERTS them at
+freeze time.
 
 Usage: python scripts/freeze_e2e_oracles.py
 Writes: bayesianrecordlinkage_jl_spark/plans/e2e_frozen.json
@@ -28,7 +29,31 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from bayesianrecordlinkage_jl_spark.plans.pipeline import MAX_BLOCK_PAIRS
+
+
+def _max_component_pairs(edges: DataFrame, comps: DataFrame, fixture: str) -> int:
+    """Assert the size cap never triggers on a fixture — no node is capped
+    and every component's above-penalty pair count is 4x under
+    MAX_BLOCK_PAIRS, so size_capped_components == plain connected
+    components — and return the largest pair count. edges: the
+    above-penalty pairs (id_a, ...)."""
+    comp_pairs = (
+        edges.join(
+            comps.select(F.col("node").alias("id_a"), "component"), on="id_a"
+        )
+        .groupBy("component")
+        .count()
+    )
+    max_pairs = comp_pairs.agg(F.max("count")).collect()[0][0] or 0
+    assert comps.where(F.col("capped")).count() == 0, f"{fixture}: cap triggered"
+    assert max_pairs * 4 <= MAX_BLOCK_PAIRS, (
+        f"{fixture}: component pair count {max_pairs} too close to cap "
+        f"{MAX_BLOCK_PAIRS}; capped-CC != plain CC is possible"
+    )
+    return max_pairs
 
 
 def main() -> None:
@@ -43,10 +68,12 @@ def main() -> None:
 
     out: dict = {}
 
-    # -- two_source_links: capture dvecs + EM params via the pipeline's own
-    # code path (monkeypatched estimate_em), so the frozen weights are
+    # -- two_source_links: capture dvecs + EM params and the capped-CC
+    # edges/components via the pipeline's own code path (monkeypatched
+    # estimate_em / size_capped_components), so the frozen weights are
     # exactly what link_two_sources computes at runtime -------------------
     from bayesianrecordlinkage_jl_spark.functions import comparators as C
+    from bayesianrecordlinkage_jl_spark.operators import connected_components as cc
     from bayesianrecordlinkage_jl_spark.operators import em
     from bayesianrecordlinkage_jl_spark.plans.pipeline import link_two_sources
     from bayesianrecordlinkage_jl_spark.sources.records import generate_records
@@ -61,7 +88,16 @@ def main() -> None:
         captured["params"] = params
         return params
 
+    orig_cap = cc.size_capped_components
+
+    def cap(edges, *a, **kw):
+        comps = orig_cap(edges, *a, **kw)
+        captured["edges"] = edges.select(F.col("src").alias("id_a"))
+        captured["comps"] = comps
+        return comps
+
     em.estimate_em = est
+    cc.size_capped_components = cap
     try:
         ra, rb = generate_records(spark, n=600, n_match=300, seed=42)
         fexprs = {
@@ -85,8 +121,10 @@ def main() -> None:
             spark, ra, rb, fexprs, kinds, nlv, block_cols=["gender"]
         )
         n_links = links.count()
+        _max_component_pairs(captured["edges"], captured["comps"], "two_source")
     finally:
         em.estimate_em = orig_est
+        cc.size_capped_components = orig_cap
 
     dvecs = captured["dvecs"]
     gcols = captured["gcols"]
@@ -128,27 +166,10 @@ def main() -> None:
         .toPandas()
         .sort_values(["g_lev", "g_jac", "g_lang"])
     )
-    # fixture-size facts the oracle's capped-CC simplification relies on:
-    # the size cap (cfg.max_block_pairs) must never trigger, i.e. at the
-    # initial threshold every component's pair count is far under the cap —
-    # then size_capped_components == plain connected components.
+    # fixture-size facts the oracle's capped-CC simplification relies on
     penalty = float(cfg.penalty)
-    pos = res.pairs.where(F.col("w") > penalty)
-    comp_pairs = (
-        pos.join(
-            res.comps.withColumnRenamed("node", "id_a").select(
-                "id_a", "component"
-            ),
-            on="id_a",
-        )
-        .groupBy("component")
-        .count()
-    )
-    max_pairs = comp_pairs.agg(F.max("count")).collect()[0][0] or 0
-    assert res.comps.where(F.col("capped")).count() == 0, "cap triggered"
-    assert max_pairs * 4 <= cfg.max_block_pairs, (
-        f"component pair count {max_pairs} too close to cap "
-        f"{cfg.max_block_pairs}; capped-CC != plain CC is possible"
+    max_pairs = _max_component_pairs(
+        res.pairs.where(F.col("w") > penalty), res.comps, "pages"
     )
 
     out["pages"] = {
@@ -162,7 +183,7 @@ def main() -> None:
         ],
         "penalty": repr(penalty),
         "max_component_pairs": int(max_pairs),
-        "max_block_pairs_cap": int(cfg.max_block_pairs),
+        "max_block_pairs_cap": int(MAX_BLOCK_PAIRS),
         "n_pages": int(len(prows)),
     }
 

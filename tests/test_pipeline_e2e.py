@@ -197,3 +197,25 @@ def test_pipeline_exact_posterior_method(spark, pages):
     stats = pairwise_f1(res.clusters, truth)
     assert stats["f1"] >= 0.99, stats
     assert assert_one_to_one(res.links)
+
+
+def test_stage_fingerprint_covers_linkage_constants(monkeypatch):
+    """The four LinkageConfig fields are the only per-call options; the
+    blocking, comparator and block-size constants live in the pipeline
+    module and still enter the StageStore fingerprint, so a resume
+    recomputes its stages when one of them changes."""
+    from bayesianrecordlinkage_jl_spark.plans import pipeline
+    from bayesianrecordlinkage_jl_spark.sources.checkpoint import config_fingerprint
+
+    assert set(LinkageConfig.__dataclass_fields__) == {
+        "penalty", "method", "use_em", "checkpoint_dir",
+    }
+    cfg = LinkageConfig()
+    base = config_fingerprint(pipeline._fingerprint(cfg))
+    for name in ("N_BANDS", "ROWS_PER_BAND", "SHINGLE_K", "LSH_MAX_BUCKET_ROWS",
+                 "LEV_PREFIX", "KEY_BLOCK_MAX_ROWS", "EXACT_MAX_BLOCK_PAIRS",
+                 "MAX_BLOCK_PAIRS", "BLOCK_SPLIT_INCR"):
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, name, getattr(pipeline, name) * 2)
+            assert config_fingerprint(pipeline._fingerprint(cfg)) != base, name
+    assert config_fingerprint(pipeline._fingerprint(cfg)) == base

@@ -71,6 +71,26 @@ def test_two_source_linkage_f1(spark, records):
     assert f1 >= 0.99, (precision, recall, f1)
 
 
+def test_two_source_linkage_without_candidate_pairs(spark, records):
+    """Two files whose blocking keys never meet: no candidate pairs, so no
+    EM fit (params None) and no links — not a division by a zero pair
+    total inside EM."""
+    a, b = records
+    links, params = link_two_sources(
+        spark,
+        a.drop("i").withColumn("gender", F.lit("A")),
+        b.drop("i").withColumn("gender", F.lit("B")),
+        field_exprs(),
+        FIELD_KINDS,
+        NLEVELS,
+        id_col="rec_id",
+        block_cols=["gender"],
+    )
+    assert params is None
+    assert links.count() == 0
+    assert links.columns == ["rid_a", "rid_b", "w", "block_id"]
+
+
 def test_tab_records_roundtrip(spark, records, tmp_path):
     """readdlm-analog scan: header + all-string columns + NA preserved."""
     from bayesianrecordlinkage_jl_spark.sources.records import (

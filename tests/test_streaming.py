@@ -4,6 +4,7 @@ watermarked windowed stats (complete-mode memory sink)."""
 
 import shutil
 import tempfile
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,6 +27,22 @@ def stream_dirs(spark):
     pages.limit(10).write.mode("append").parquet(inp)
     yield {"in": inp, "out": out, "ckpt": ckpt, "pages": pages}
     shutil.rmtree(root, ignore_errors=True)
+
+
+def _stop_once_drained(q, timeout_s: float = 120) -> None:
+    """Stop an availableNow query whose state uses ProcessingTimeTimeout.
+    Such state makes Spark follow every batch with a no-data batch (to fire
+    timeouts), so the query never ends on its own and processAllAvailable()
+    never returns. The first no-data batch means the input is drained."""
+    deadline = time.monotonic() + timeout_s
+    while q.isActive and time.monotonic() < deadline:
+        p = q.lastProgress
+        if p is not None and p["numInputRows"] == 0:
+            break
+        time.sleep(0.1)
+    if not q.isActive:
+        q.awaitTermination()  # re-raises a query failure
+    q.stop()
 
 
 def test_ingest_availablenow(spark, stream_dirs):
@@ -114,7 +131,7 @@ def test_stateful_fingerprint_dedup(spark, stream_dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _stop_once_drained(q)
     got = spark.sql("SELECT * FROM fp_dedup")
     batch = spark.read.parquet(stream_dirs["in"]).withColumn(
         "fingerprint", doc_fingerprint(F.col("text")).cast("string")
@@ -298,7 +315,7 @@ def test_streaming_scd2_matches_batch_twin(spark, stream_dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _stop_once_drained(q)
     got = {
         (r["url"], r["version_no"], r["fp"], r["valid_from"])
         for r in spark.sql("SELECT * FROM page_versions").collect()
